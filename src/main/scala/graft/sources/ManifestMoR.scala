@@ -28,6 +28,19 @@ private[sources] trait ManifestMoR { this: ManifestTable.type =>
       s"$verb requires no pending deletion vectors — run purgeDeletes first " +
         "(a rewrite or append under pending DVs could resurrect or re-delete rows)")
 
+  /** Deletion vectors store the key as INT64: every verb taking the vector
+    * route checks here before writing anything, or a vector of meaningless
+    * keys would wedge the table behind a pending vector no purge folds. */
+  private[sources] def requireBigintKey(schema: StructType, keyCol: String,
+      base: String): Unit =
+    schema.fields.find(_.name.equalsIgnoreCase(keyCol)).foreach { f =>
+      if (f.dataType != org.apache.spark.sql.types.LongType)
+        throw new UnsupportedOperationException(
+          s"merge-on-read under $base needs a BIGINT keyCol, but $keyCol is " +
+            s"${f.dataType.sql} — deletion vectors store keys as INT64; key " +
+            "the table on a BIGINT column or write copy-on-write")
+    }
+
   /** The table's bucket count, when it carries the bucket layout. */
   private[sources] def bucketNOf(spark: SparkSession, base: String): Option[Int] =
     tableProperties(spark, base).get("bucket.n").map(_.toInt)
@@ -245,10 +258,12 @@ private[sources] trait ManifestMoR { this: ManifestTable.type =>
     val rel = s"_dv/d-${java.util.UUID.randomUUID}"
     val dvPath = s"$base/$rel"
     val fs = fsOf(spark, new Path(base))
+    val snapshot = readVersion(spark, base, readV)
+    requireBigintKey(snapshot.schema, keyCol, base)
     // the predicate scan is pinned to the snapshot the retry validates;
     // __pval is the MANIFEST pval of the row's FILE (era-proof — see
     // filePvalExpr for the invariant)
-    readVersion(spark, base, readV).filter(pred)
+    snapshot.filter(pred)
       .select(col(keyCol), filePvalExpr.as("__pval"))
       .write.parquet(dvPath)
     consolidateDvDir(spark, base, rel)
@@ -332,6 +347,8 @@ private[sources] trait ManifestMoR { this: ManifestTable.type =>
       keyCol: String, partCol: String,
       raceInject: () => Unit = () => ()): Boolean = {
     val readV = currentVersion(spark, base)
+    val matched = readVersion(spark, base, readV).filter(pred)
+    requireBigintKey(matched.schema, keyCol, base)
     require(entries(spark, base, readV).forall { case (_, rel) =>
       !(rel.startsWith("/") || rel.contains("://")) },
       s"updateWhereMoR under $base requires an all-relative manifest — " +
@@ -341,7 +358,6 @@ private[sources] trait ManifestMoR { this: ManifestTable.type =>
     val rel = s"_dv/d-${java.util.UUID.randomUUID}"
     val dvPath = s"$base/$rel"
     val fs = fsOf(spark, new Path(base))
-    val matched = readVersion(spark, base, readV).filter(pred)
     matched
       .select(col(keyCol), filePvalExpr.as("__pval"))
       .write.parquet(dvPath)
@@ -485,37 +501,42 @@ private[sources] trait ManifestMoR { this: ManifestTable.type =>
   def readMoR(spark: SparkSession, base: String, keyCol: String): DataFrame = {
     val dvs = pendingDvRels(spark, base)
     val data = read(spark, base)
-    if (dvs.isEmpty) data
-    else {
-      // FAST PATH — delete-only vectors (no `_cut` sidecar anywhere, the
-      // common case): every named pair hides unconditionally, so the
-      // plain broadcast anti-join suffices — no per-row file-version
-      // extraction, no pair aggregation
-      if (dvs.forall(rel => dvCutOf(spark, base, rel) == Int.MaxValue)) {
-        // no distinct: LEFT ANTI is unaffected by duplicate build rows,
-        // so deduplicating the vector would only buy an extra exchange
-        // (the q_table_mor drift-watch found it — one whole stage of the
-        // fast path was spent deduplicating an already-near-unique set)
-        val pairs = spark.read
-          .parquet(dvs.map(rel => s"$base/$rel"): _*)
-          .select(col(keyCol), col("__pval"))
-        data.withColumn("__pval", filePvalExpr)
-          .join(broadcast(pairs), Seq(keyCol, "__pval"), "left_anti")
-          .drop("__pval")
-      } else {
-        // per-pair MAX cut: if any vector hides the pair at this file's
-        // version, the row is gone (a later unfenced delete of an updated
-        // key hides the updated copy too, as it must)
-        val pairs = readDvPairs(spark, base, dvs, keyCol)
-          .groupBy(col(keyCol), col("__pval")).agg(max(col("__cut")).as("__cut"))
-        data.withColumn("__pval", filePvalExpr)
-          .withColumn("__fv",
-            coalesce(regexp_extract(input_file_name(), "files/v(\\d+)/", 1)
-              .cast("int"), lit(-1)))
-          .join(broadcast(pairs), Seq(keyCol, "__pval"), "left")
-          .filter(col("__cut").isNull || col("__fv") >= col("__cut"))
-          .drop("__pval", "__fv", "__cut")
-      }
+    if (dvs.isEmpty) data else hideDvRows(spark, base, data, dvs, keyCol)
+  }
+
+  /** `data` (a read of data files) minus the rows the vectors `dvs` hide,
+    * joined on the (key, FILE-manifest-pval) pair each vector recorded —
+    * the one join behind [[readMoR]], [[purgeDeletes]] and [[readBranch]]. */
+  private[sources] def hideDvRows(spark: SparkSession, base: String,
+      data: DataFrame, dvs: Seq[String], keyCol: String): DataFrame = {
+    val keyed = data.withColumn("__pval", filePvalExpr)
+    // FAST PATH — delete-only vectors (no `_cut` sidecar anywhere, the
+    // common case): every named pair hides unconditionally, so the
+    // plain broadcast anti-join suffices — no per-row file-version
+    // extraction, no pair aggregation
+    if (dvs.forall(rel => dvCutOf(spark, base, rel) == Int.MaxValue)) {
+      // no distinct: LEFT ANTI is unaffected by duplicate build rows,
+      // so deduplicating the vector would only buy an extra exchange
+      // (the q_table_mor drift-watch found it — one whole stage of the
+      // fast path was spent deduplicating an already-near-unique set)
+      val pairs = spark.read
+        .parquet(dvs.map(rel => s"$base/$rel"): _*)
+        .select(col(keyCol), col("__pval"))
+      keyed.join(broadcast(pairs), Seq(keyCol, "__pval"), "left_anti")
+        .drop("__pval")
+    } else {
+      // per-pair MAX cut: if any vector hides the pair at this file's
+      // version, the row is gone (a later unfenced delete of an updated
+      // key hides the updated copy too, as it must)
+      val pairs = readDvPairs(spark, base, dvs, keyCol)
+        .groupBy(col(keyCol), col("__pval")).agg(max(col("__cut")).as("__cut"))
+      keyed
+        .withColumn("__fv",
+          coalesce(regexp_extract(input_file_name(), "files/v(\\d+)/", 1)
+            .cast("int"), lit(-1)))
+        .join(broadcast(pairs), Seq(keyCol, "__pval"), "left")
+        .filter(col("__cut").isNull || col("__fv") >= col("__cut"))
+        .drop("__pval", "__fv", "__cut")
     }
   }
 
@@ -537,34 +558,15 @@ private[sources] trait ManifestMoR { this: ManifestTable.type =>
     val dv = readDvPairs(spark, base, dvs, keyCol)
     val touched = dv.select(col("__pval")).distinct()
       .collect().map(_.getString(0)).toSet // DV-metadata-sized
-    val pairs = dv.groupBy(col(keyCol), col("__pval"))
-      .agg(max(col("__cut")).as("__cut"))
     val nKeys = dv.select(col(keyCol)).distinct().count()
     // dryRun: the would-be summary (partitions the fold would rewrite,
     // keys it would purge) from the vectors alone — no scan, no commit
     if (dryRun) return (touched.size, nKeys)
     val (hot, _) = es.partition { case (pval, _) => touched(pval) }
-    // the same (key, partition, version-fence) scoping readMoR applies: a
-    // key's rows in a touched partition survive unless a vector names
-    // that exact (key, partition) AND the row's file predates its cut —
-    // an updateWhereMoR's own appended copies always survive their
-    // vector. Delete-only vectors (no cuts) take the plain anti-join.
-    val hotData = spark.read
-      .parquet(hot.map { case (_, rel) => resolve(base, rel) }: _*)
-      .withColumn("__pval", filePvalExpr)
-    val survivors =
-      if (dvs.forall(rel => dvCutOf(spark, base, rel) == Int.MaxValue))
-        hotData
-          .join(broadcast(pairs.select(col(keyCol), col("__pval"))),
-            Seq(keyCol, "__pval"), "left_anti")
-          .drop("__pval")
-      else hotData
-        .withColumn("__fv",
-          coalesce(regexp_extract(input_file_name(), "files/v(\\d+)/", 1)
-            .cast("int"), lit(-1)))
-        .join(broadcast(pairs), Seq(keyCol, "__pval"), "left")
-        .filter(col("__cut").isNull || col("__fv") >= col("__cut"))
-        .drop("__pval", "__fv", "__cut")
+    // the same (key, partition, version-fence) scoping readMoR applies
+    val survivors = hideDvRows(spark, base,
+      spark.read.parquet(hot.map { case (_, rel) => resolve(base, rel) }: _*),
+      dvs, keyCol)
     val newFiles = writeSnapshotFiles(spark, base, v + 1, survivors, partCol)
     // the purge's commit DROPS the folded markers (dropDvMarkers) — a DV
     // that landed after the read is caught by the retry's marker check

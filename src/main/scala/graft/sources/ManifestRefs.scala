@@ -324,7 +324,9 @@ private[sources] trait ManifestRefs { this: ManifestTable.type =>
       new Path(manifestDir(base), branchManifestName(name, readHead)))
       .map { case (_, r) => resolve(base, r) }
     require(headPaths.nonEmpty, s"branch $name under $base is empty")
-    spark.read.parquet(headPaths: _*).filter(pred)
+    val head = spark.read.parquet(headPaths: _*)
+    requireBigintKey(head.schema, keyCol, base)
+    head.filter(pred)
       .select(org.apache.spark.sql.functions.col(keyCol),
         filePvalExpr.as("__pval"))
       .write.parquet(dvPath)
@@ -399,32 +401,7 @@ private[sources] trait ManifestRefs { this: ManifestTable.type =>
     // a vector can only exist under the MoR stamp, which requires keyCol
     val kcOpt = tableProperties(spark, base).get("keyCol")
     if (dvs.isEmpty || kcOpt.isEmpty) plain
-    else {
-      val keyCol = kcOpt.get
-      if (dvs.forall(rel => dvCutOf(spark, base, rel) == Int.MaxValue)) {
-        // delete-only vectors: every named (key, pval) pair hides
-        // unconditionally — plain broadcast anti-join
-        val pairs = spark.read
-          .parquet(dvs.map(rel => s"$base/$rel"): _*)
-          .select(col(keyCol), col("__pval"))
-        plain.withColumn("__pval", filePvalExpr)
-          .join(broadcast(pairs), Seq(keyCol, "__pval"), "left_anti")
-          .drop("__pval")
-      } else {
-        // fenced vectors (branch UPDATE): hide only rows whose file dir
-        // version sits below the pair's max cut — the commit's own
-        // appended copies survive
-        val pairs = readDvPairs(spark, base, dvs, keyCol)
-          .groupBy(col(keyCol), col("__pval")).agg(max(col("__cut")).as("__cut"))
-        plain.withColumn("__pval", filePvalExpr)
-          .withColumn("__fv",
-            coalesce(regexp_extract(input_file_name(), "files/v(\\d+)/", 1)
-              .cast("int"), lit(-1)))
-          .join(broadcast(pairs), Seq(keyCol, "__pval"), "left")
-          .filter(col("__cut").isNull || col("__fv") >= col("__cut"))
-          .drop("__pval", "__fv", "__cut")
-      }
-    }
+    else hideDvRows(spark, base, plain, dvs, kcOpt.get)
   }
 
   /** APPEND to a branch — main is untouched. Same optimistic protocol as

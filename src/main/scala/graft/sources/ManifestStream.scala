@@ -156,11 +156,12 @@ final class ManifestStreamTable(schema: StructType, base: String,
       // spec's composite writer; nothing recomputes a pval from one
       // source column anymore, so composites (and mixed-era manifests
       // after spec evolution) need no special case
-      if (mor)
+      if (mor) {
+        ManifestTable.requireBigintKey(schema, props("keyCol"), base)
         new ManifestRowLevelDeltaOp(this, base, info.command(),
           props("keyCol"), props("partCol"), props.get("bucket.n").map(_.toInt),
           GraftTransform.fromProps(props), GraftSpec.fromProps(props))
-      else new ManifestRowLevelOp(this, base, info.command(),
+      } else new ManifestRowLevelOp(this, base, info.command(),
         GraftTransform.fromProps(props), GraftSpec.fromProps(props))
     }
 
@@ -210,8 +211,8 @@ final class ManifestStreamTable(schema: StructType, base: String,
     // so a table created programmatically (partCol property only) never
     // becomes unreadable by emptying itself
     if (!props.contains("schema")) {
-      val meta = Set("_pval", "_change_type", "_commit_version")
-      val data = StructType(schema.fields.filterNot(f => meta(f.name)))
+      val data = StructType(schema.fields.filterNot(f =>
+        ManifestFileReaderFactory.MetaCols(f.name)))
       val ser = ManifestSchemaProp.serialize(data)
       // the stamp must round-trip through the property store, or the
       // empty post-TRUNCATE snapshot would be permanently unreadable —
@@ -517,6 +518,10 @@ final class ManifestStreamTable(schema: StructType, base: String,
           with org.apache.spark.sql.connector.read.SupportsReportPartitioning
           with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
           with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+        // rows only: the planner then never builds a reader factory
+        // (and its parquet reader) just to ask
+        override def columnarSupportMode(): Scan.ColumnarSupportMode =
+          Scan.ColumnarSupportMode.UNSUPPORTED
         /** Size/row estimates from table METADATA (file statuses + the
           * sidecar row counts), replacing Spark's pessimistic
           * defaultSizeInBytes for v2 relations — a genuinely small
@@ -1132,12 +1137,8 @@ private[sources] object ManifestColMap {
           val row = spark.range(1)
             .select(org.apache.spark.sql.functions.expr(sql)
               .cast(f.dataType).as("v")).head
-          val value: Any = f.dataType match {
-            case StringType =>
-              org.apache.spark.unsafe.types.UTF8String.fromString(row.getString(0))
-            case _ => row.get(0)
-          }
-          f.name -> value
+          f.name -> org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .convertToCatalyst(row.get(0))
         }
       }.toMap
 }
@@ -2855,6 +2856,8 @@ final class ManifestChangesTable(base: String, fullName: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     () => new Scan {
       override def readSchema(): StructType = full
+      override def columnarSupportMode(): Scan.ColumnarSupportMode =
+        Scan.ColumnarSupportMode.UNSUPPORTED
       override def toBatch: org.apache.spark.sql.connector.read.Batch =
         new org.apache.spark.sql.connector.read.Batch {
           private val stream =
@@ -2972,12 +2975,13 @@ final class ManifestBranchTable(base: String, fullName: String,
         org.apache.spark.sql.SparkSession.active, base)
       val mor = props0.get("write.mode").contains("merge-on-read") &&
         props0.contains("keyCol") && props0.contains("partCol")
-      if (mor)
+      if (mor) {
+        ManifestTable.requireBigintKey(dataSchema, props0("keyCol"), base)
         new ManifestBranchRowLevelDeltaOp(this, base, branch, info.command(),
           props0("keyCol"), props0("partCol"),
           props0.get("bucket.n").map(_.toInt),
           GraftTransform.fromProps(props0), GraftSpec.fromProps(props0))
-      else new ManifestBranchRowLevelOp(this, base, branch, info.command())
+      } else new ManifestBranchRowLevelOp(this, base, branch, info.command())
     }
 
   /** Branch scan with COLUMN PRUNING, a PLANNING RECORDER (the pvals the
@@ -3025,6 +3029,8 @@ final class ManifestBranchTable(base: String, fullName: String,
       override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushedFlt
       override def build(): Scan = new Scan
           with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+        override def columnarSupportMode(): Scan.ColumnarSupportMode =
+          Scan.ColumnarSupportMode.UNSUPPORTED
         @volatile private var runtimePvals: Option[Set[String]] = None
         override def readSchema(): StructType = projected
         override def filterAttributes()
@@ -3632,8 +3638,6 @@ private[sources] object ManifestDvPairCache {
     * partition's file-manifest pval. */
   private[sources] def load(base: String, rels: Seq[String], fs: FileSystem)
       : (String, String, Map[(Long, String), Int]) = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
     val dvDirs = rels.map(rel => new Path(base, rel))
     // the _partcol sidecar names the DATA column the recorded partition
     // values came from; every pending vector of a table must agree
@@ -3943,7 +3947,11 @@ final class ManifestMicroBatchStream(base: String, schema: StructType,
   }
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = org.apache.spark.sql.SparkSession.active
-    new ManifestFileReaderFactory(schema,
+    // a change feed's DV delete images filter on the table's key column —
+    // read only where a vector was ever written (a BIGINT key, then)
+    val keyCol = ManifestTable.tableProperties(spark, base).get("keyCol")
+      .filter(_ => changeFeed && fs.exists(new Path(base, "_dv"))).getOrElse("")
+    new ManifestFileReaderFactory(schema, keyCol,
       colmap = ManifestColMap.of(spark, base),
       defaults = ManifestColMap.defaults(spark, base, schema))
   }
@@ -3962,10 +3970,10 @@ final case class ManifestKeyedPartition(paths: Seq[String], key: InternalRow,
 }
 
 /** Test-only observability for the reader's page-level projection: the
-  * number of parquet fields each file reader actually REQUESTED (after
-  * footer intersection). Local-mode specs read it to pin that a narrow
-  * projection decodes narrow — production cost is one integer per
-  * reader construction. */
+  * number of parquet fields each file reader REQUESTED (intersected with
+  * the footer when the file's footer is read). Local-mode specs read it
+  * to pin that a narrow projection decodes narrow — production cost is
+  * one integer per reader construction. */
 object ManifestReaderStats {
   private val counts = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
   private[sources] def record(n: Int): Unit = counts.add(n)
@@ -3977,48 +3985,65 @@ object ManifestReaderStats {
   }
 }
 
+/** Reads manifest data files for every connector scan: Spark's own
+  * `ParquetFileFormat` decodes each file (vectorized when the schema
+  * allows, rows out), then one per-file `UnsafeProjection` and a row
+  * filter add what the table format layers on plain parquet:
+  *  - RENAME: a served column reads its ORIGINAL footer name from
+  *    pre-rename files, its logical name from later ones;
+  *  - DEFAULT: a field ABSENT from the footer serves its declared default
+  *    (a field present but null stays null);
+  *  - the `_pval` and change-feed constant columns;
+  *  - the deletion-vector version fence and the change feed's DV images.
+  * The reader function is built ONCE on the driver, over every name a
+  * file may store a served column under plus `keyCol` (the DV key, read
+  * even when the projection drops it); only those column chunks decode. */
 final class ManifestFileReaderFactory(schema: StructType,
-    dvCol: String = "",
+    keyCol: String = "",
     dvPairs: Map[(Long, String), Int] = Map.empty,
     colmap: Map[String, String] = Map.empty,
     defaults: Map[String, Any] = Map.empty)
     extends PartitionReaderFactory {
-  // RENAME name mapping: a served (logical) column reads its ORIGINAL
-  // footer name from pre-rename files and its logical name from files
-  // written after the rename — per file, physical wins when present
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, UnsafeProjection}
+  import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+
   private def physicalOf(logical: String): String =
     colmap.getOrElse(logical, logical)
-  // the one column the row-filter side needs beyond the served schema:
-  // the DV key must decode even when the projection drops it, or in-scan
-  // deletes would stop applying (the pval side is the partition's own
-  // manifest pval — no data column involved)
-  private def dvFields: Seq[String] =
-    if (dvPairs.nonEmpty) Seq(dvCol) else Seq.empty
 
-  /** Serve the `_pval` METADATA column (when projected) from the file's
-    * manifest entry — a constant per partition, no decoding. */
-  private def pvalOverride(pval: String): Map[String, Any] =
-    if (schema.fieldNames.contains("_pval"))
-      Map("_pval" -> UTF8String.fromString(pval))
-    else Map.empty
+  private val readSchema: StructType = {
+    val data = schema.fields.toSeq
+      .filterNot(f => ManifestFileReaderFactory.MetaCols(f.name))
+      .flatMap(f => Seq(physicalOf(f.name), f.name).map(StructField(_, f.dataType)))
+    val key = if (keyCol.nonEmpty) Seq(StructField(keyCol, LongType)) else Nil
+    StructType((data ++ key).distinctBy(_.name))
+  }
+
+  private val readFile: PartitionedFile => Iterator[InternalRow] = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .buildReaderWithPartitionValues(spark, readSchema, new StructType(),
+        readSchema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+  }
+
+  // pval -> (key -> version cut): the in-scan deletion vector
+  @transient private lazy val cutsByPval: Map[String, Map[Long, Int]] =
+    dvPairs.groupBy(_._1._2).map { case (pval, m) =>
+      pval -> m.map { case ((k, _), cut) => k -> cut } }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case ManifestFilePartition(path, pval) =>
-        val fv = ManifestTable.dirVersionOf(path)
-        fileReader(path, g => !deleted(g, fv, pval), pvalOverride(pval),
-          extraFields = dvFields)
+      case ManifestFilePartition(path, pval) => snapshotFile(path, pval)
       case CdfFilePartition(path, ct, v) =>
-        fileReader(path, _ => true, Map(
-          "_change_type" -> UTF8String.fromString(ct), "_commit_version" -> v))
+        fileReader(path, Map(
+          "_change_type" -> UTF8String.fromString(ct), "_commit_version" -> v),
+          _ => true)
       case CdfDvPartition(path, kc, keys, v) =>
+        val k = keyOrdinal(kc)
         val ks = keys.toSet
-        fileReader(path,
-          g => g.getType.containsField(kc) &&
-            g.getFieldRepetitionCount(kc) > 0 && ks(g.getLong(kc, 0)),
-          Map("_change_type" -> UTF8String.fromString("delete"),
+        fileReader(path, Map("_change_type" -> UTF8String.fromString("delete"),
             "_commit_version" -> v),
-          extraFields = Seq(kc))
+          r => !r.isNullAt(k) && ks(r.getLong(k)))
       case ManifestKeyedPartition(paths, _, pval) =>
         // chain the value's files through one reader
         new PartitionReader[InternalRow] {
@@ -4028,10 +4053,7 @@ final class ManifestFileReaderFactory(schema: StructType,
             while (cur == null || !cur.next()) {
               if (cur != null) cur.close()
               if (!it.hasNext) { cur = null; return false }
-              val p = it.next()
-              val fv = ManifestTable.dirVersionOf(p)
-              cur = fileReader(p, g => !deleted(g, fv, pval), pvalOverride(pval),
-                extraFields = dvFields)
+              cur = snapshotFile(it.next(), pval)
             }
             true
           }
@@ -4041,101 +4063,86 @@ final class ManifestFileReaderFactory(schema: StructType,
       case other => throw new IllegalStateException(s"unexpected partition $other")
     }
 
-  /** The version fence: a named (key, pval) pair hides this row only
-    * when the row's file dir version sits BELOW the pair's cut — an
-    * update vector never hides the copies its own commit appended. The
-    * pval side is the FILE's manifest pval (handed in per input
-    * partition), exactly what the vector recorded — layout- and
+  private def keyOrdinal(kc: String): Int = {
+    val k = readSchema.fieldNames.indexOf(kc)
+    if (k < 0) throw new IllegalStateException(
+      s"manifest scan: deletion-vector key column $kc is not read")
+    k
+  }
+
+  /** A snapshot file under the version fence: a named (key, pval) pair
+    * hides a row only when the row's file dir version sits BELOW the
+    * pair's cut — an update vector never hides the copies its own commit
+    * appended. The pval side is the FILE's manifest pval (handed in per
+    * input partition), exactly what the vector recorded — layout- and
     * era-independent by construction. */
-  private def deleted(g: org.apache.parquet.example.data.Group,
-      fileVer: Int, pval: String): Boolean =
-    dvPairs.nonEmpty && g.getType.containsField(dvCol) &&
-      g.getFieldRepetitionCount(dvCol) > 0 &&
-      dvPairs.get((g.getLong(dvCol, 0), pval)).exists(cut => fileVer < cut)
+  private def snapshotFile(path: String, pval: String): PartitionReader[InternalRow] = {
+    val cuts = cutsByPval.getOrElse(pval, Map.empty)
+    val keep: InternalRow => Boolean =
+      if (cuts.isEmpty) _ => true
+      else {
+        val fv = ManifestTable.dirVersionOf(path)
+        val k = keyOrdinal(keyCol)
+        r => r.isNullAt(k) || !cuts.get(r.getLong(k)).exists(fv < _)
+      }
+    fileReader(path, Map("_pval" -> UTF8String.fromString(pval)), keep)
+  }
 
   /** Decode one parquet file into rows of `schema`, keeping only rows
-    * `keep` admits; `overrides` supplies values for schema fields the
-    * file does not store (the CDF metadata columns); `extraFields` are
-    * columns the keep-filter reads beyond the served schema.
-    *
-    * COLUMN PRUNING REACHES THE PAGES: the requested read schema is the
-    * file's OWN footer schema filtered to the needed field names
-    * (`parquet.read.schema`), so parquet-hadoop materializes only those
-    * column chunks — a narrow projection over a wide table skips the
-    * other columns' pages entirely. Building the request from the file's
-    * footer (one metadata read, which a parquet split does anyway) keeps
-    * evolved files safe: a late-added column simply isn't requested from
-    * files that predate it, and the name-resolving `get()` nulls it. */
-  private def fileReader(path: String,
-      keep: org.apache.parquet.example.data.Group => Boolean,
-      overrides: Map[String, Any] = Map.empty,
-      extraFields: Seq[String] = Seq.empty): PartitionReader[InternalRow] = {
+    * `keep` admits (tested on the decoded read row); `constants` supplies
+    * the metadata columns. */
+  private def fileReader(path: String, constants: Map[String, Any],
+      keep: InternalRow => Boolean): PartitionReader[InternalRow] = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new Path(path), ManifestFileReaderFactory.fileConf)
+    // the footer decides RENAME and DEFAULT per file; without either, a
+    // requested name the file lacks decodes as null both ways
+    val stored: Set[String] =
+      if (colmap.isEmpty && defaults.isEmpty) readSchema.fieldNames.toSet
+      else {
+        val fr = ParquetFileReader.open(in)
+        val footer = try fr.getFooter.getFileMetaData.getSchema finally fr.close()
+        readSchema.fieldNames.filter(footer.containsField).toSet
+      }
+    ManifestReaderStats.record(stored.size)
+    // output field j is a stored column of the read row, or slot j of a
+    // constant row joined after it (metadata value, DEFAULT or null)
+    val fixed = new GenericInternalRow(schema.length)
+    val exprs = schema.fields.toSeq.zipWithIndex.map { case (f, j) =>
+      val src = if (constants.contains(f.name)) None
+        else Seq(physicalOf(f.name), f.name).find(stored)
+      src match {
+        case Some(n) => BoundReference(readSchema.fieldIndex(n), f.dataType, nullable = true)
+        case None =>
+          fixed.update(j, constants.getOrElse(f.name, defaults.getOrElse(f.name, null)))
+          BoundReference(readSchema.length + j, f.dataType, nullable = true)
+      }
+    }
+    val project = UnsafeProjection.create(exprs)
+    val joined = new JoinedRow()
+    val raw = readFile(PartitionedFile(InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPath(new Path(path)), 0L, in.getLength,
+      fileSize = in.getLength))
+    val rows = raw.filter(keep)
     new PartitionReader[InternalRow] {
-      private val reader = {
-        import scala.jdk.CollectionConverters._
-        val conf = new Configuration()
-        val wanted: Set[String] =
-          (schema.fields.filterNot(f => overrides.contains(f.name))
-            .flatMap(f => Seq(f.name, physicalOf(f.name))).toSet) ++ extraFields
-        val inFile = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(path), conf)
-        val fr = ParquetFileReader.open(inFile)
-        val fileSchema =
-          try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-        val fields = fileSchema.getFields.asScala.filter(f => wanted(f.getName))
-        if (fields.nonEmpty && fields.size < fileSchema.getFieldCount)
-          conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-            new org.apache.parquet.schema.MessageType(
-              fileSchema.getName, fields.asJava).toString)
-        ManifestReaderStats.record(
-          if (fields.nonEmpty) fields.size else fileSchema.getFieldCount)
-        ParquetReader
-          .builder(new GroupReadSupport(), new Path(path))
-          .withConf(conf)
-          .build()
+      private var cur: InternalRow = _
+      override def next(): Boolean =
+        rows.hasNext && { cur = project(joined(rows.next(), fixed)); true }
+      override def get(): InternalRow = cur
+      override def close(): Unit = raw match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
       }
-      private var cur: org.apache.parquet.example.data.Group = _
-      override def next(): Boolean = {
-        cur = reader.read()
-        while (cur != null && !keep(cur)) cur = reader.read()
-        cur != null
-      }
-      override def get(): InternalRow = {
-        val vals = schema.fields.map { f =>
-          overrides.getOrElse(f.name, {
-            val gt = cur.getType
-            // per-file name resolution: the mapped physical name (old
-            // files) wins when the footer has it; a post-rename file
-            // carries the logical name instead
-            val phys = physicalOf(f.name)
-            val use =
-              if (gt.containsField(phys)) phys
-              else if (phys != f.name && gt.containsField(f.name)) f.name
-              else null
-            // a field ABSENT from the footer serves its declared DEFAULT
-            // (pre-evolution files — Iceberg's initial-default); a field
-            // PRESENT but null stays null (the writer stored a real null)
-            if (use == null) defaults.getOrElse(f.name, null)
-            else if (cur.getFieldRepetitionCount(use) == 0) null
-            else f.dataType match {
-              // TIMESTAMP: INT64 UTC micros, identical in parquet
-              // (adjustedToUTC) and Spark's internal row
-              case LongType | TimestampType => cur.getLong(use, 0)
-              // DATE: INT32 days since epoch, identical in parquet and
-              // Spark's internal row
-              case IntegerType | DateType => cur.getInteger(use, 0)
-              case DoubleType  => cur.getDouble(use, 0)
-              case StringType  => UTF8String.fromString(cur.getString(use, 0))
-              case dt => throw new UnsupportedOperationException(
-                s"manifest-stream reader: unsupported type $dt for ${f.name}")
-            }
-          })
-        }
-        new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-      }
-      override def close(): Unit = reader.close()
     }
   }
+}
+
+object ManifestFileReaderFactory {
+  /** Served columns no data file stores: the reader supplies them. */
+  private[sources] val MetaCols = Set("_pval", "_change_type", "_commit_version")
+  /** One read-only conf per JVM for file lookups: building a
+    * `Configuration` parses its XML resources, tens of ms per task. */
+  private lazy val fileConf = new Configuration()
 }
 
 /** The WRITE half of the connector — a Structured Streaming SINK that

@@ -26,9 +26,12 @@ object Bench {
     // SF (39.4 s vs 36.5 s over 10 queries: CC-based dedup wins 0.66-0.80x
     // but the iterative graph loops lose 1.2-1.3x) — shuffled-hash is
     // applied per-join via hints where it measured faster instead.
+    // the session zone is pinned here, like Verify's and perfbench's, so
+    // the zone a run times does not depend on how the JVM was launched
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -59,26 +62,35 @@ object Bench {
     if (seeded > 0)
       System.err.println(s"[bench] fixture index seeded $seeded entries " +
         s"under ${Scratch.root}")
+    // each rep also counts the Spark jobs it started; the artifact keeps
+    // the count of the fastest rep (a host-independent layer figure)
+    final case class Rep(time: Double, jobs: Long)
+    val jobs = new JobCounter(spark)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
-      val times = (1 to math.max(1, reps)).map { _ =>
+      val runs = (1 to math.max(1, reps)).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case t: Throwable =>
+        try {
+          val (_, n) = jobs.count(fn(spark, sfDir).count())
+          Rep((System.nanoTime() - t0) / 1e9, n)
+        } catch { case t: Throwable =>
           // local iteration: surface WHY a query failed instead of a bare
           // NaN (the artifact's -1 signal is unchanged)
           if (sys.env.contains("SPARK_GRAFT_DEBUG")) t.printStackTrace()
-          Double.NaN
+          Rep(Double.NaN, -1L)
         }
       }
-      val ok = times.filterNot(_.isNaN)
-      name -> (if (ok.nonEmpty) ok.min else -1.0, times)
+      val ok = runs.filterNot(_.time.isNaN)
+      name -> (if (ok.nonEmpty) ok.minBy(_.time) else Rep(-1.0, -1L), runs.map(_.time))
     }.toMap
-    val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
+    jobs.close()
+    val qs = results.map { case (k, (best, _)) => s"\"" + k + "\":" + best.time }
       .mkString("{", ",", "}")
-    val total = results.values.map(_._1).filter(_ >= 0.0).sum
-    val nFailed = results.values.count(_._1 < 0.0)
+    val jobsField = results.map { case (k, (best, _)) => s"\"" + k + "\":" + best.jobs }
+      .mkString(",\"jobs\":{", ",", "}")
+    val total = results.values.map(_._1.time).filter(_ >= 0.0).sum
+    val nFailed = results.values.count(_._1.time < 0.0)
     // SPARK_GRAFT_REP_TIMES=1 adds every rep's raw time per query: rep 1
     // pays the query's one-time fixture build (scratch-table CREATE +
     // INSERT for catalog queries), later reps hit the cache — the delta
@@ -104,7 +116,7 @@ object Bench {
         }
       } catch { case _: Throwable => "" }
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$nFailed$density$repField}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$jobsField,"sf":"$sfDir","failed":$nFailed$density$repField}"""
     println(line)
     // persist the clean artifact so judge/driver comparisons don't depend on
     // the host being quiet at driver run time (VERDICT r2 item 8)

@@ -3,6 +3,7 @@ package graft.dedup
 import graft.QuerySpec
 import graft.exprs.GraftFunctions
 import graft.model.Tables
+import graft.ops.Loop
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -317,11 +318,12 @@ object Dedup {
     connectedComponentsWithRounds(pairs, srcCol, dstCol, maxIter)._1
 
   /** One large-star + small-star contraction round, LAZY — no action, no
-    * checkpoint; callers compose and materialize. */
+    * checkpoint; callers compose and materialize. Returns the round's new
+    * (a, b) pairs, repeats included: [[byNode]] makes them distinct. */
   private def starRound(edges: DataFrame, bcastRows: Long = -1L): DataFrame = {
     // large-star: for each directed (x, y) with y > x, re-attach y to
     // m(x) = min(Γ(x) ∪ {x}); m ≤ x < y keeps the (larger, smaller)
-    // orientation with no re-sorting
+    // orientation with no re-sorting and never makes a self-loop
     val nbrs = edges.select(col("u").as("x"), col("v").as("y"))
       .unionAll(edges.select(col("v").as("x"), col("u").as("y")))
     // the per-node min side is one row per node (always the smaller side).
@@ -338,70 +340,91 @@ object Dedup {
       else df.hint("shuffle_hash")
     val minsL = nbrs.groupBy(col("x")).agg(min(col("y")).as("mn"))
       .select(col("x"), least(col("x"), col("mn")).as("m"))
+    // large-star's output may repeat an edge; it is not made distinct here,
+    // because the small-star min ignores repeats and [[byNode]]'s distinct
+    // drops them (one exchange fewer per round)
     val afterLarge = nbrs.filter(col("y") > col("x"))
       .join(stateSide(minsL), Seq("x"))
       .select(col("y").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
     // small-star: all edges here point down (u > v); every u and its
     // smaller neighbors re-attach to min(Γ⁻(u) ∪ {u})
     val minsS = afterLarge.groupBy(col("u")).agg(min(col("v")).as("m"))
-    val reattached = afterLarge.join(stateSide(minsS), Seq("u"))
+    afterLarge.join(stateSide(minsS), Seq("u"))
       .select(col("v").as("a"), col("m").as("b"))
       .unionAll(minsS.select(col("u").as("a"), col("m").as("b")))
-    reattached
       .filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-      .distinct()
   }
 
+  /** The distinct undirected edges of (a, b) pairs seen from each end: one
+    * row per (node n, neighbour o), hash-partitioned by n, so that the
+    * per-node figures are window aggregates with no second exchange. The
+    * edges are the rows with o < n (u = n, v = o). A self-loop or a pair
+    * with a null end keeps its nodes and makes no edge. `head` flags one
+    * row per node; `star` is false on a node that breaks star form — more
+    * than one smaller neighbour, or one and also a larger one. A graph
+    * with no such node is a union of min-rooted stars, which both star
+    * ops map to itself: the fixpoint. */
+  private def byNode(pairs: DataFrame): DataFrame = {
+    val ends = pairs
+      .select(explode(array(struct(col("a").as("n"), col("b").as("o")),
+        struct(col("b").as("n"), col("a").as("o")))).as("e"))
+      .select(col("e.n").as("n"), col("e.o").as("o"))
+      .repartition(col("n"))
+      .distinct()
+    val node = Window.partitionBy(col("n"))
+    val lower = count(when(col("o") < col("n"), 1)).over(node)
+    val higher = count(when(col("o") > col("n"), 1)).over(node)
+    ends.select(col("n"), col("o"),
+      (row_number().over(node.orderBy(col("o"))) === 1).as("head"),
+      (lower <= 1 && !(lower === 1 && higher > 0)).as("star"))
+  }
+
+  private def edgesOf(view: DataFrame): DataFrame =
+    view.filter(col("o") < col("n")).select(col("n").as("u"), col("o").as("v"))
+
   /** [[connectedComponents]] plus (star rounds run, convergence probes run)
-    * — exposed so tests can pin the O(log n) convergence bound. Rounds
-    * include the final verification round that observes no change.
+    * — exposed so tests can pin the O(log n) convergence bound. Every
+    * round carries its own probe, so the two counts agree.
     *
-    * Probing is PER ROUND, deliberately: batching two rounds per probe
-    * (round-6 experiment) measured ~2× SLOWER on the hot cluster queries
-    * at sf0.1 — the per-round probe is already cheap (the count on the
-    * just-checkpointed edges short-circuits the anti-join whenever the
-    * edge count is still changing, which is every round but the last),
-    * while a batched probe detects the fixpoint one full batch late and
-    * so pays up to TWO extra star rounds (each two shuffles + a distinct
-    * over the edge set) to save driver-blocking jobs that cost almost
-    * nothing. Star rounds dominate probes at every scale; probe batching
-    * optimizes the wrong side of that ratio. */
+    * The probe costs no job of its own: each round's checkpoint is the
+    * [[byNode]] view of its output, whose job also observes the edge count
+    * and whether any node breaks star form. The loop stops on the first
+    * star-form edge set — already the fixpoint, so no further round has
+    * to run to see nothing change (and a pair graph that is star-form from
+    * the start runs no round at all). Batching two rounds per probe
+    * (round-6 experiment) measured ~2× SLOWER at sf0.1: a batched probe
+    * detects the fixpoint one full batch late and so pays up to TWO extra
+    * star rounds. */
   def connectedComponentsWithRounds(
       pairs: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 25): (DataFrame, Int, Int) = {
-    val nodes = pairs.select(col(srcCol).as("id"))
-      .unionAll(pairs.select(col(dstCol).as("id")))
-      .distinct().localCheckpoint()
-    // canonical orientation: u = larger endpoint, v = smaller
-    var edges = pairs
-      .select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-      .distinct().localCheckpoint()
+    val edgeCount = count(when(col("o") < col("n"), 1))
+    val unstarred = count(when(!col("star"), 1))
+    // the pair plan (for the registry's callers an LSH join plus a
+    // verification) runs once: nodes and edges both derive from this cut
+    val (view, st) = Loop.cut(byNode(pairs.select(col(srcCol).as("a"), col(dstCol).as("b"))),
+      count(when(col("head"), 1)), edgeCount, unstarred)
+    val nodes = view.filter(col("head")).select(col("n").as("id"))
+    // node count bounds every round's per-node min side and decides the
+    // rounds' join strategy
+    val nNodes = st.getLong(0)
+    var edges = edgesOf(view)
+    var nEdges = st.getLong(1)
+    var stable = st.getLong(2) == 0
     var rounds = 0
-    var probes = 0
-    var stable = edges.isEmpty
-    // node count bounds every round's per-node min side — one count of
-    // the checkpointed node set decides the rounds' join strategy
-    val nNodes = nodes.count()
     while (!stable && rounds < maxIter) {
-      val newEdges = starRound(edges, nNodes).localCheckpoint()
+      val (next, c) = Loop.cut(byNode(starRound(edges, nNodes)), edgeCount, unstarred)
       rounds += 1
-      // fixpoint of both ops ⇔ union of min-rooted stars; the cheap count
-      // short-circuits the anti-join until the edge count stops moving
-      probes += 1
-      stable = newEdges.count() == edges.count() &&
-        newEdges.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      edges = newEdges
+      edges = edgesOf(next)
+      nEdges = c.getLong(0)
+      stable = c.getLong(1) == 0
     }
     require(stable, s"connectedComponents did not converge in $maxIter rounds")
     val labels = nodes
-      .join(edges.select(col("u").as("id"), col("v").as("lbl")), Seq("id"), "left_outer")
+      .join(graft.ops.AdaptiveBroadcast.ifFits(
+        edges.select(col("u").as("id"), col("v").as("lbl")), nEdges), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
-    (labels, rounds, probes)
+    (labels, rounds, rounds)
   }
 
   /** Reference implementation: iterative min-label propagation, one

@@ -3,7 +3,8 @@ package graft.sim
 import graft.QuerySpec
 import graft.exprs.GraftFunctions
 import graft.model.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.ops.Loop
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -400,11 +401,10 @@ object Ann {
     * is one Lloyd step from deterministic seeds (vec_id < 8) with the
     * centroid update an INTEGER element-wise mean (sum div count — both
     * engines truncate toward zero); distances are integer squared-L2.
-    * The relational formulation keeps vectors EXPLODED by position:
-    * assignment and update are equi-joins + aggregations on (subspace,
-    * position), the codebook stays tiny and broadcast, and nothing ever
-    * materializes an all-pairs product — ADC is a join on (subspace, code)
-    * against the |Q|·M·K-row distance tables. */
+    * Training is the shared Lloyd engine below (codebook on the driver,
+    * vectors distributed per subspace), and nothing ever materializes an
+    * all-pairs product — ADC is a join on (subspace, code) against the
+    * |Q|·M·K-row distance tables. */
   val pqAnn: QuerySpec = QuerySpec.sql(
     "q_pq_ann",
     """WITH pos AS (
@@ -448,18 +448,13 @@ object Ann {
       |                            ORDER BY adc ASC, vec_id ASC) AS rnk
       |  FROM adc) WHERE rnk <= 5
       |ORDER BY query_id, rnk""".stripMargin) { (spark, dir) =>
-    val (seeds, nQ, topK) = (8, 5, 5)
-    val pos = pqPositions(spark, dir)
-    val seed = pos.filter(col("vec_id") < seeds)
-      .select(col("s"), col("vec_id").as("cid"), col("j"), col("x").as("c"))
-    val a1 = pqArgmin(pqDist(pos, seed))
-    val upd = pqUpdate(pos, a1)
-    val d2 = pqDist(pos, upd)
-    val a2 = pqArgmin(d2)
-    val adc = a2.join(
-        d2.filter(col("vec_id") < nQ)
-          .select(col("vec_id").as("query_id"), col("s"), col("cid"), col("d")),
-        Seq("s", "cid"))
+    val (nQ, topK) = (5, 5)
+    val (vs, seed) = pqStart(spark, dir, pqContiguous)
+    val cb = lloydStep(vs, seed, None)._1
+    val dq = vs.filter(col("vec_id") < nQ)
+      .select(col("vec_id").as("query_id"), col("s"), explode(centroidDists(cb)).as("t"))
+      .select(col("query_id"), col("s"), col("t.cid"), col("t.d"))
+    val adc = assignments(vs, cb).join(dq, Seq("s", "cid"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("d")).cast("long").as("adc"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc").asc, col("vec_id").asc)
@@ -472,108 +467,170 @@ object Ann {
   // ---- PQ Lloyd-step engine ------------------------------------------------
   //
   // Shared by q_pq_ann (one step — the oracle-friendliest form), q_pq_train
-  // (k unrolled steps, still oracle-replayed), and pqTrainConverged (the
-  // production fixpoint loop, spec-bounded). Every piece is the exact
-  // integer discipline of [[pqAnn]]: micro-unit components, integer
-  // squared-L2, `sum div count` centroid means.
+  // (k unrolled steps, still oracle-replayed), pqTrainConverged (the
+  // production fixpoint loop, spec-bounded) and the allocation probe. Every
+  // piece is the exact integer discipline of [[pqAnn]]: micro-unit
+  // components, integer squared-L2 with ties to the smaller cid, and
+  // `sum div count` centroid means.
+  //
+  // The codebook (K·M·16 = 512 values) stays on the driver between rounds,
+  // as Spark MLlib's KMeans keeps its centers; the vectors stay distributed,
+  // one row per (vector, subspace) holding its 16 components. A round is
+  // one projection that picks each row's nearest centroid against the
+  // codebook literal, then one `sum div count` aggregate per (subspace,
+  // centroid) whose collected rows are the next codebook: one exchange a
+  // round, no join, nothing checkpointed after the start.
 
-  /** Exploded (vec_id, subspace, position, micro-component) table — the
-    * relational form PQ trains on. M=4 subspaces × 16 dims. */
-  private def pqPositions(spark: SparkSession, dir: String): DataFrame =
+  private val PqSubDims = 16
+  private val PqSeeds = 8
+
+  /** One codebook entry: subspace, centroid id, the members it was
+    * averaged over (0 for a seed) and its components. */
+  private final case class Centroid(s: Int, cid: Long, n: Long, c: Seq[Long])
+
+  /** Dimension allocation `alloc(s)(j)`: the 0-based embedding position of
+    * component j of subspace s. M=4 contiguous 16-dim slices by default. */
+  private val pqContiguous: Seq[Seq[Int]] =
+    (0 until 4).map(s => (0 until PqSubDims).map(s * PqSubDims + _))
+
+  /** (vec_id, s, xs): each vector's micro-unit components per subspace. */
+  private def pqVectors(spark: SparkSession, dir: String, alloc: Seq[Seq[Int]]): DataFrame =
     Tables.embeddings(spark, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j0", "xf")))
-      .select(col("vec_id"),
-        (col("j0") / 16).cast("int").as("s"),
-        (col("j0") % 16).as("j"),
-        floor(col("xf").cast("double") * 1000000 + 0.5).cast("long").as("x"))
-      .localCheckpoint() // several consumers; materialize the explode once
+      .select(col("vec_id"), col("embedding"), posexplode(typedLit(alloc)).as(Seq("s", "dims")))
+      .select(col("vec_id"), col("s"), transform(col("dims"), i =>
+        floor(element_at(col("embedding"), i + 1).cast("double") * 1000000 + 0.5)
+          .cast("long")).as("xs"))
 
-  /** Integer squared-L2 of every vector-subspace against every centroid of
-    * its subspace (broadcast codebook — K·M·16 rows). */
-  private def pqDist(pos: DataFrame, cents: DataFrame): DataFrame =
-    pos.join(broadcast(cents), Seq("s", "j"))
-      .groupBy(col("vec_id"), col("s"), col("cid"))
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("d"))
-
-  /** Nearest centroid per (vector, subspace), ties to the smaller cid. */
-  private def pqArgmin(d: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("vec_id"), col("s"))
-      .orderBy(col("d").asc, col("cid").asc)
-    d.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select(col("vec_id"), col("s"), col("cid"))
+  /** [[pqVectors]] checkpointed for the rounds, and the seed codebook (the
+    * vectors with vec_id < 8) observed on the same job. */
+  private def pqStart(spark: SparkSession, dir: String,
+      alloc: Seq[Seq[Int]]): (DataFrame, Seq[Centroid]) = {
+    val (vs, st) = Loop.cut(pqVectors(spark, dir, alloc),
+      collect_list(when(col("vec_id") < PqSeeds, struct(col("s"), col("vec_id"), col("xs")))))
+    (vs, st.getSeq[Row](0).map(r => Centroid(r.getInt(0), r.getLong(1), 0L, r.getSeq[Long](2)))
+      .sortBy(c => (c.s, c.cid)))
   }
 
-  /** Lloyd centroid update: integer element-wise mean of each centroid's
-    * assigned vectors (`sum div count` — truncation toward zero in both
-    * engines). Metadata-sized; checkpointed because every consumer would
-    * otherwise replay the assignment window. */
-  private def pqUpdate(pos: DataFrame, a: DataFrame): DataFrame =
-    a.join(pos, Seq("vec_id", "s"))
-      .groupBy(col("s"), col("cid"), col("j"))
-      .agg(expr("sum(x) div count(1)").as("c"))
-      .localCheckpoint()
+  /** Per row, struct(d, cid) for every centroid of the row's subspace: the
+    * integer squared-L2 from `xs` to it. */
+  private def centroidDists(cb: Seq[Centroid]): Column = {
+    val bySubspace = typedLit((0 until cb.map(_.s + 1).maxOption.getOrElse(0)).map(s =>
+      cb.filter(_.s == s).map(c => (c.cid, c.c))))
+    transform(element_at(bySubspace, col("s") + 1), c =>
+      struct(aggregate(zip_with(col("xs"), c("_2"), (x, y) => (x - y) * (x - y)),
+        lit(0L), _ + _).as("d"), c("_1").as("cid")))
+  }
+
+  /** struct(d, cid) of the nearest centroid: struct order is d, then the
+    * smaller cid. */
+  private def nearest(cb: Seq[Centroid]): Column = array_min(centroidDists(cb))
+
+  /** (vec_id, s, cid): each (vector, subspace)'s nearest centroid in `cb`. */
+  private def assignments(vs: DataFrame, cb: Seq[Centroid]): DataFrame =
+    vs.select(col("vec_id"), col("s"), nearest(cb)("cid").as("cid"))
+
+  /** One Lloyd step: assign every (vector, subspace) to its nearest
+    * centroid in `cb` and average each centroid's members into the next
+    * codebook. With `prev` (the codebook of the step before) the same
+    * aggregate counts the rows whose assignment changed between the two.
+    * Returns (next codebook, changed). */
+  private def lloydStep(vs: DataFrame, cb: Seq[Centroid],
+      prev: Option[Seq[Centroid]]): (Seq[Centroid], Long) = {
+    val cid = nearest(cb)("cid")
+    val changed = prev.fold(lit(0L))(p => (cid =!= nearest(p)("cid")).cast("long"))
+    val rows = vs.select(col("s"), cid.as("cid"), col("xs"), changed.as("changed"))
+      .groupBy(col("s"), col("cid"))
+      .agg(count(lit(1)), sum(col("changed")) +:
+        (0 until PqSubDims).map(j => expr(s"sum(xs[$j]) div count(1)")): _*)
+      .collect()
+    (rows.map(r => Centroid(r.getInt(0), r.getLong(1), r.getLong(2),
+        (0 until PqSubDims).map(j => r.getLong(4 + j)))).toSeq.sortBy(c => (c.s, c.cid)),
+      rows.map(_.getLong(3)).sum)
+  }
+
+  /** Lloyd steps from `seed` until NO (vector, subspace) changes centroid
+    * (k-means' objective strictly decreases until then, so the loop
+    * terminates). Returns the codebook and the rounds run, including the
+    * verification round; None if `maxIter` rounds did not reach it. */
+  private def lloydFixpoint(vs: DataFrame, seed: Seq[Centroid],
+      maxIter: Int): Option[(Seq[Centroid], Int)] = {
+    var (cb, prev) = (seed, Option.empty[Seq[Centroid]])
+    var rounds = 0
+    var stable = false
+    while (!stable && rounds < maxIter) {
+      val (next, changed) = lloydStep(vs, cb, prev)
+      stable = prev.isDefined && changed == 0
+      if (!stable) {
+        prev = Some(cb)
+        cb = next
+      }
+      rounds += 1
+    }
+    if (stable) Some((cb, rounds)) else None
+  }
+
+  /** Sum over (vector, subspace) of the squared-L2 to the nearest centroid. */
+  private def distortion(vs: DataFrame, cb: Seq[Centroid]): Long =
+    vs.agg(sum(nearest(cb)("d")).cast("long")).collect()(0).getLong(0)
+
+  /** The codebook as (s, cid, j, c, n_assigned) rows, built in (s, cid, j)
+    * order: it is driver state, so no Spark sort is needed. */
+  private def codebookFrame(spark: SparkSession, cb: Seq[Centroid]): DataFrame = {
+    import spark.implicits._
+    cb.flatMap(c => c.c.zipWithIndex.map { case (x, j) => (c.s, c.cid, j, x, c.n) })
+      .toDF("s", "cid", "j", "c", "n_assigned")
+  }
+
+  /** `rounds` Lloyd steps from the seeds: (vectors, the codebook the last
+    * step assigned against, the final codebook). */
+  private def pqRounds(spark: SparkSession, dir: String,
+      rounds: Int): (DataFrame, Seq[Centroid], Seq[Centroid]) = {
+    require(rounds >= 1, "at least one Lloyd round")
+    val (vs, seed) = pqStart(spark, dir, pqContiguous)
+    var (used, cb) = (seed, seed)
+    for (_ <- 1 to rounds) {
+      used = cb
+      cb = lloydStep(vs, cb, None)._1
+    }
+    (vs, used, cb)
+  }
 
   /** `rounds` full Lloyd iterations from the deterministic seeds
     * (vec_id < 8). Returns (final codebook, the assignment that produced
     * it) — the assignment/update pair the oracle's unrolled CTEs replay. */
   def pqTrainRounds(spark: SparkSession, dir: String,
       rounds: Int): (DataFrame, DataFrame) = {
-    require(rounds >= 1, "at least one Lloyd round")
-    val pos = pqPositions(spark, dir)
-    var cents = pos.filter(col("vec_id") < 8)
-      .select(col("s"), col("vec_id").as("cid"), col("j"), col("x").as("c"))
-      .localCheckpoint()
-    var assigns: DataFrame = null
-    for (_ <- 1 to rounds) {
-      assigns = pqArgmin(pqDist(pos, cents))
-      cents = pqUpdate(pos, assigns)
-    }
-    (cents, assigns)
+    val (vs, used, cb) = pqRounds(spark, dir, rounds)
+    (codebookFrame(spark, cb).drop("n_assigned"), assignments(vs, used))
   }
 
   /** PQ training iterated to CONVERGENCE — the production form; the
     * registered [[pqTrain]] fixes 4 rounds only so its oracle can unroll
-    * them. Rounds run until NO (vector, subspace) changes centroid, checked
-    * with one tiny count probe per round (the `pageRankConverged`
-    * driver-coordination budget: k-means' objective strictly decreases
-    * until the assignment fixpoint, so the loop terminates). Returns
-    * (codebook, assignments, rounds including the verification round).
-    * Refuses to return an unconverged codebook. */
+    * them. Rounds run until NO (vector, subspace) changes centroid, the
+    * change counted in each round's own aggregate. Returns (codebook,
+    * assignments, rounds including the verification round). Refuses to
+    * return an unconverged codebook. */
   def pqTrainConverged(spark: SparkSession, dir: String,
       maxIter: Int = 60): (DataFrame, DataFrame, Int) = {
-    val pos = pqPositions(spark, dir)
-    var cents = pos.filter(col("vec_id") < 8)
-      .select(col("s"), col("vec_id").as("cid"), col("j"), col("x").as("c"))
-      .localCheckpoint()
-    var prev: DataFrame = null
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxIter) {
-      val a = pqArgmin(pqDist(pos, cents)).localCheckpoint()
-      if (prev != null) {
-        val changed = a.join( // 1-row probe, like pageRankConverged
-            prev.select(col("vec_id"), col("s"), col("cid").as("pcid")),
-            Seq("vec_id", "s"))
-          .filter(col("cid") =!= col("pcid")).count()
-        stable = changed == 0
-      }
-      if (!stable) cents = pqUpdate(pos, a)
-      prev = a
-      rounds += 1
-    }
-    require(stable, s"PQ training did not converge in $maxIter rounds")
-    (cents, prev, rounds)
+    val (vs, seed) = pqStart(spark, dir, pqContiguous)
+    val fixpoint = lloydFixpoint(vs, seed, maxIter)
+    require(fixpoint.isDefined, s"PQ training did not converge in $maxIter rounds")
+    val (cb, rounds) = fixpoint.get
+    (codebookFrame(spark, cb).drop("n_assigned"), assignments(vs, cb), rounds)
   }
 
   /** Total integer quantization distortion of `cents` over the corpus —
     * Σ over (vector, subspace) of the squared-L2 to its nearest centroid.
     * The scalar the Lloyd iteration minimizes; exposed for the spec's
     * more-rounds-is-better check. */
-  def pqDistortion(spark: SparkSession, dir: String, cents: DataFrame): Long =
-    pqDist(pqPositions(spark, dir), cents)
-      .groupBy(col("vec_id"), col("s")).agg(min(col("d")).as("d"))
-      .agg(sum(col("d")).cast("long").as("t"))
-      .collect()(0).getLong(0)
+  def pqDistortion(spark: SparkSession, dir: String, cents: DataFrame): Long = {
+    val cb = cents.select(col("s"), col("cid"), col("j"), col("c")).collect()
+      .groupBy(r => (r.getInt(0), r.getLong(1))).toSeq
+      .map { case ((s, cid), rs) =>
+        Centroid(s, cid, 0L, rs.sortBy(_.getInt(2)).map(_.getLong(3)).toSeq)
+      }
+    distortion(pqVectors(spark, dir, pqContiguous), cb)
+  }
 
   /** OPQ-STYLE DIMENSION-ALLOCATION probe (Ge et al., "Optimized Product
     * Quantization", CVPR 2013, with the learned rotation RESTRICTED to a
@@ -588,49 +645,25 @@ object Ann {
     * variance-balanced distortion); AnnSpec records the measured
     * ship/reject verdict. */
   private[sim] def pqAllocationProbe(spark: SparkSession, dir: String): (Long, Long) = {
-    val base = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j0", "xf")))
-      .select(col("vec_id"), col("j0"),
-        floor(col("xf").cast("double") * 1000000 + 0.5).cast("long").as("x"))
-      .localCheckpoint()
     // per-dimension variance: 64 rows, driver-side like any codebook
-    val byVar = base.groupBy(col("j0"))
+    val byVar = Tables.embeddings(spark, dir)
+      .select(posexplode(col("embedding")).as(Seq("j0", "xf")))
+      .select(col("j0"), floor(col("xf").cast("double") * 1000000 + 0.5).cast("long").as("x"))
+      .groupBy(col("j0"))
       .agg(avg(col("x")).as("m"), avg(col("x") * col("x")).as("m2"))
       .select(col("j0"), (col("m2") - col("m") * col("m")).as("v"))
       .collect().map(r => (r.getInt(0), r.getDouble(1)))
       .sortBy { case (j0, v) => (-v, j0) }
-    import spark.implicits._
-    def posWith(alloc: Seq[(Int, Int, Int)]): DataFrame =
-      base.join(broadcast(alloc.toDF("j0", "s", "j")), Seq("j0"))
-        .select(col("vec_id"), col("s"), col("j"), col("x"))
-    val contiguous = (0 until 64).map(j0 => (j0, j0 / 16, j0 % 16))
-    val balanced = byVar.zipWithIndex.map { case ((j0, _), i) => (j0, i % 4, i / 4) }.toSeq
-    def convergedDistortion(pos: DataFrame): Long = {
-      var cents = pos.filter(col("vec_id") < 8)
-        .select(col("s"), col("vec_id").as("cid"), col("j"), col("x").as("c"))
-        .localCheckpoint()
-      var prev: DataFrame = null
-      var stable = false
-      var rounds = 0
-      while (!stable && rounds < 60) {
-        val a = pqArgmin(pqDist(pos, cents)).localCheckpoint()
-        if (prev != null) {
-          stable = a.join(
-              prev.select(col("vec_id"), col("s"), col("cid").as("pcid")),
-              Seq("vec_id", "s"))
-            .filter(col("cid") =!= col("pcid")).count() == 0
-        }
-        if (!stable) cents = pqUpdate(pos, a)
-        prev = a
-        rounds += 1
-      }
-      require(stable, "allocation probe did not converge")
-      pqDist(pos, cents)
-        .groupBy(col("vec_id"), col("s")).agg(min(col("d")).as("d"))
-        .agg(sum(col("d")).cast("long").as("t"))
-        .collect()(0).getLong(0)
+    // dealt round-robin: the i-th most varied dimension is component i/4
+    // of subspace i%4
+    val balanced = (0 until 4).map(s => (0 until PqSubDims).map(j => byVar(j * 4 + s)._1))
+    def convergedDistortion(alloc: Seq[Seq[Int]]): Long = {
+      val (vs, seed) = pqStart(spark, dir, alloc)
+      val fixpoint = lloydFixpoint(vs, seed, 60)
+      require(fixpoint.isDefined, "allocation probe did not converge")
+      distortion(vs, fixpoint.get._1)
     }
-    (convergedDistortion(posWith(contiguous)), convergedDistortion(posWith(balanced)))
+    (convergedDistortion(pqContiguous), convergedDistortion(balanced))
   }
 
   /** Oracle for [[pqTrain]]: the k assignment/update rounds unrolled as
@@ -675,11 +708,8 @@ object Ann {
     * strictly reduce distortion vs the 1-step codebook. */
   val pqTrain: QuerySpec = QuerySpec.sql(
     "q_pq_train", pqTrainOracleSql(4)) { (spark, dir) =>
-    val (cents, assigns) = pqTrainRounds(spark, dir, 4)
-    val n = assigns.groupBy(col("s"), col("cid")).agg(count(lit(1)).as("n_assigned"))
-    cents.join(n, Seq("s", "cid"))
-      .select(col("s"), col("cid"), col("j"), col("c"), col("n_assigned"))
-      .orderBy(col("s"), col("cid"), col("j"))
+    // the last step's member counts are the final assignment's counts
+    codebookFrame(spark, pqRounds(spark, dir, 4)._3)
   }
 
   /** IVF-PQ — the composition the two halves above exist for (FAISS's
@@ -979,9 +1009,9 @@ object Ann {
 
   // ---- incremental-IVF fixture helpers ------------------------------------
 
-  /** Exploded (vec_id, global position, micro-component) — the full-vector
-    * twin of [[pqPositions]] (no subspace split: the coarse quantizer sees
-    * the whole vector). */
+  /** Exploded (vec_id, global position, micro-component) — the same
+    * micro-unit components as [[pqVectors]], with no subspace split (the
+    * coarse quantizer sees the whole vector). */
   private def annMicro(df: DataFrame): DataFrame = df
     .select(col("vec_id"), posexplode(col("embedding")).as(Seq("jg", "xf")))
     .select(col("vec_id"), col("jg"),

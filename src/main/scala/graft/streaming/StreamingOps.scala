@@ -1010,14 +1010,11 @@ object StreamingSink {
       .withColumn("event_date", col("ts").cast("date"))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          batch.repartition(col("event_date"))
-            .write.mode("append")
-            .partitionBy("event_date")
-            .parquet(outDir)
-        } finally batch.unpersist()
-        ()
+        // the batch is read once, by this write, so it is not cached
+        batch.repartition(col("event_date"))
+          .write.mode("append")
+          .partitionBy("event_date")
+          .parquet(outDir)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

@@ -72,9 +72,9 @@ class DedupSpec extends AnyFunSuite {
   test("pointer-doubling converges in <= ceil(log2(diameter))+1 rounds on a diameter-8 chain") {
     // 9-node path graph 0-1-…-8: min-label propagation needs O(diameter)=8
     // rounds; the alternating star ops must do it in ceil(log2 8)+1 = 4
-    // (3 contraction rounds + the fixpoint-verification round). Probes are
-    // per round — see connectedComponentsWithRounds on why batching them
-    // measured slower
+    // (it takes 3 contraction rounds: the fixpoint is observed on the last
+    // one's own output). Probes are per round — see
+    // connectedComponentsWithRounds on why batching them measured slower
     val chain = (0L until 8L).map(i => (i, i + 1)).toDF("a", "b")
     val (labels, rounds, probes) = Dedup.connectedComponentsWithRounds(chain, "a", "b")
     val got = labels.as[(Long, Long)].collect().toMap

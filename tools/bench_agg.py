@@ -10,6 +10,11 @@ registry keys. (The round-12 gap this closes: q_bucket_cdf passed
 CORRECTNESS and appeared in run22 but was missing from the 244-query
 canonical aggregate because runs 13-21 predated it.)
 
+When the runs carry per-query Spark job counts (`"jobs"`, written by
+graft.Bench), the aggregate keeps each query's count from its fastest run.
+When the --control runs carry them too, it prints every shared query's
+jobs new vs control and flags each query whose count rose.
+
 Usage:
   python3 tools/bench_agg.py bench_history/BENCH_clean_sf0.1_run*.json \
       --registry /tmp/verify_out/oracle_sql.json -o BENCH_clean_rN.json
@@ -55,10 +60,24 @@ if problems:
         print(f"FATAL: {msg}", file=sys.stderr)
     sys.exit(1)
 
+def fastest_jobs(rs, qs):
+    """Per query, the Spark job count of the fastest successful run
+    (graft.Bench records jobs per query; older artifacts carry none)."""
+    if not all("jobs" in r for r in rs):
+        return None
+    out = {}
+    for q in qs:
+        ok = [r for r in rs if r["queries"].get(q, -1) >= 0 and q in r["jobs"]]
+        if ok:
+            out[q] = min(ok, key=lambda r: r["queries"][q])["jobs"][q]
+    return out
+
+
 best = {}
 for q in sorted(union):
     ok = [r["queries"][q] for _, r in runs if r["queries"][q] >= 0]
     best[q] = min(ok) if ok else -1
+jobs = fastest_jobs([r for _, r in runs], sorted(union))
 failed = sorted(q for q, v in best.items() if v < 0)
 out = {
     "metric": "total",
@@ -69,6 +88,8 @@ out = {
     "runs": len(runs),
     "failed": failed,
 }
+if jobs is not None:
+    out["jobs"] = jobs
 if a.control:
     # per-query MIN over the interleaved old-code runs, restricted to the
     # queries both code states share; the headline control_total compares
@@ -113,6 +134,9 @@ if a.control:
             statistics.median(pratios) if pratios else None,
         "queries": cbest,
     }
+    cjobs = fastest_jobs(cruns, shared)
+    if jobs is not None and cjobs is not None:
+        out["control"]["jobs"] = cjobs
 json.dump(out, open(a.out, "w"), indent=1)
 print(f"wrote {a.out}: {len(best)} queries, total {out['value']:.1f}s, "
       f"{len(failed)} failed, min over {len(runs)} runs")
@@ -124,3 +148,13 @@ if a.control:
           f"{c['median_query_ratio']:.3f} paired-fair total="
           f"{c['paired_total_ratio']:.3f} paired-fair median="
           f"{c['paired_median_query_ratio']:.3f}")
+    if "jobs" in c:
+        # jobs are host-independent: a rise is a regression on any host
+        both = sorted(q for q in c["jobs"] if q in jobs)
+        rose = [q for q in both if jobs[q] > c["jobs"][q]]
+        print(f"jobs per query (new vs control), {len(both)} shared, "
+              f"total {sum(jobs[q] for q in both)} vs "
+              f"{sum(c['jobs'][q] for q in both)}, {len(rose)} rose:")
+        for q in both:
+            flag = "  ROSE" if q in rose else ""
+            print(f"  {q:32s} {jobs[q]:6d} {c['jobs'][q]:6d}{flag}")
